@@ -11,11 +11,10 @@ import graft.functions.MinhashSlices
   * `SELECT minhash_slices(tokens, 0, 3)` works in `spark.sql` /
   * spark-sql / thrift-server sessions.
   *
-  * Wire up with:
+  * Wire up on a session builder with:
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)
+  * // or: builder.config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan capture for the optimization rounds:
   * `runMain graft.PlanDump <outDir> <suffix> [sfDir] [q1 q2 ...]`
   * writes `<outDir>/<query>_<suffix>.txt` with the formatted physical
   * plan of each named declared query (all queries when none named), in
-  * ONE JVM under the same session posture as Bench. Warmup builds the
+  * ONE JVM under Bench's session posture. Bench's warm-up builds the
   * standing artifacts first so the captured plan is the steady-state
   * serving plan, not the build.
   */
@@ -22,43 +20,8 @@ object PlanDump {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val names =
       if (args.length > 3) args.drop(3).toSeq else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.memory.storageFraction", "0.3")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // standing artifacts (same set Bench warms) so plans are steady-state
-    try {
-      graft.vector.VectorOps.ivfCentroids(spark, sfDir).count()
-      graft.vector.VectorOps.refinedPqCodebooks(spark, sfDir).count()
-      graft.vector.VectorOps.qKnnClusters(spark, sfDir).count()
-      graft.vector.VectorOps.warmAnnExact(spark, sfDir)
-      graft.sources.Fixtures.ensure(spark)
-      graft.dedup.Dedup.minhashPairs(spark, sfDir).count()
-      graft.dedup.Dedup.corpusClusters(spark, sfDir).count()
-      graft.sources.Fixtures.qEmbClusters(spark, sfDir).count()
-      graft.text.Retrieval.warm(spark, sfDir)
-      graft.etl.Ledger.warm(spark, sfDir)
-      graft.ops.Sink.warmCompactInput(spark, sfDir)
-      graft.vector.KnnIncr.qKnnIncr(spark, sfDir).count()
-      graft.vector.KnnIncr.qKnnStream(spark, sfDir).count()
-      graft.vector.KnnPart.qKnnPartIncr(spark, sfDir).count()
-      graft.vector.KnnPart.warm(spark, sfDir)
-      graft.vector.KnnRouter.warm(spark)
-      graft.ops.BloomJoin.builtOrderkeyBloom(spark, sfDir)
-    } catch { case e: Throwable =>
-      // r13 ADVICE: a failed warmup means the captured plans include
-      // build work — the exact contamination this instrument excludes.
-      // Make it visible instead of silently shipping non-steady plans.
-      System.err.println(s"[plandump] WARMUP FAILED (plans may include standing-artifact build work): $e")
-    }
+    val spark = Bench.session()
+    Bench.warm(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { q =>
       SparkEntry.queries.get(q) match {

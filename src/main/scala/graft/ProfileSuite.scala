@@ -1,58 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrument: for each named query (default: all),
   * time separately (a) DataFrame construction — driver-side operator
   * code incl. any eager side work the operator does, (b) first
   * `.count()` — analysis+optimization+codegen+execution, (c) second
   * `.count()` — re-execution with the plan warm. Printed as one TSV
   * line per query so the split driver-work / first-run / steady-state
-  * is visible per query and summable across the suite.
+  * is visible per query and summable across the suite. Runs under
+  * Bench's session posture after Bench's warm-up.
   * `runMain graft.ProfileSuite [sfDir] [q1 q2 ...]`
   */
 object ProfileSuite {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.memory.storageFraction", "0.3")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val w = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      w.groupBy("l_returnflag").count().count()
-      graft.vector.VectorOps.ivfCentroids(spark, sfDir).count()
-      graft.vector.VectorOps.refinedPqCodebooks(spark, sfDir).count()
-      graft.vector.VectorOps.qKnnClusters(spark, sfDir).count()
-      graft.vector.VectorOps.warmAnnExact(spark, sfDir)
-      graft.sources.Fixtures.ensure(spark)
-      graft.dedup.Dedup.minhashPairs(spark, sfDir).count()
-      graft.dedup.Dedup.corpusClusters(spark, sfDir).count()
-      graft.sources.Fixtures.qEmbClusters(spark, sfDir).count()
-      graft.text.Retrieval.warm(spark, sfDir)
-      graft.etl.Ledger.warm(spark, sfDir)
-      graft.ops.Sink.warmCompactInput(spark, sfDir)
-      graft.vector.KnnIncr.qKnnIncr(spark, sfDir).count()
-      graft.vector.KnnIncr.qKnnStream(spark, sfDir).count()
-      graft.vector.KnnPart.qKnnPartIncr(spark, sfDir).count()
-      graft.vector.KnnPart.warm(spark, sfDir)
-      graft.vector.KnnRouter.warm(spark)
-      graft.ops.BloomJoin.builtOrderkeyBloom(spark, sfDir)
-    } catch { case e: Throwable =>
-      // r13 ADVICE: a failed warmup means the timings below include
-      // standing-artifact build work — say so instead of hiding it
-      System.err.println(s"[profile] WARMUP FAILED (timings may include standing-artifact build work): $e")
-    }
+    val spark = Bench.session()
+    Bench.warm(spark, sfDir)
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -51,7 +51,11 @@ object Tables {
     * experiment that widened text-payload tokenization this way LOST
     * (shuffling document bodies cost more than the serial tokenize;
     * guide §8's rule that heavy payloads must not ride extra
-    * exchanges). */
+    * exchanges). Safe only on EXCHANGE-FREE scan projections: `df.rdd`
+    * finalizes the physical plan, and under AQE an input that holds an
+    * exchange would run its stages eagerly here. The guard counts
+    * byte-range splits, not populated partitions, so a single row
+    * group larger than maxPartitionBytes passes through unwidened. */
   def widened(spark: SparkSession, df: DataFrame): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < target) df.repartition(target) else df

@@ -229,7 +229,10 @@ object Dedup {
     // expression once more per side (4 corpus-wide simhash passes per
     // invocation, 2 scans). The checkpoint is fingerprint-sized
     // (doc_id, sh — 16 B/doc); at 100 TB this is the signature table a
-    // production dedup materializes before banding anyway.
+    // production dedup materializes before banding anyway. The
+    // checkpoint is eager: merely BUILDING this query runs a
+    // corpus-wide simhash job (a plan capture pays it too), and each
+    // call adds tracked blocks until the next StandingState.release().
     val s = Tables.documents(spark, dir)
       .select(col("doc_id"), TextHashes.simhash64(split(col("text"), " ")).as("sh"))
       .localCheckpointTracked()

@@ -116,22 +116,23 @@ object Ledger {
   /** Collected-manifest cache (r14, guide §5: the driver should do
     * almost no data work — and re-reading a file-count-sized manifest
     * through a full Spark job per call IS data work at the driver's
-    * expense). Keyed (table, version); VALIDATED per call against the
-    * manifest directory's file identity (every entry's name + length +
-    * mtime — a Spark rewrite always changes the part file's UUID name),
-    * so an in-session table rebuild or vacuum can never serve stale
-    * rows — the exact staleness hazard that made r13 reject a naive
-    * (table, version) memo. The cached value is the collected rows
-    * rebuilt as a LOCAL RELATION: every downstream
-    * `.select("path").collect()` constant-folds to a job-free
-    * LocalTableScan, and joins/prunes against the manifest carry local
+    * expense). Keyed (applicationId, table, version) like every other
+    * memo, so a stopped session's relation is never served to a new
+    * one; VALIDATED per call against the manifest directory's file
+    * identity (every entry's name + length + mtime — a Spark rewrite
+    * always changes the part file's UUID name), so an in-session table
+    * rebuild or vacuum can never serve stale rows — the exact staleness
+    * hazard that made r13 reject a naive (table, version) memo. The
+    * cached value is the collected rows rebuilt as a LOCAL RELATION:
+    * every downstream `.select("path").collect()` constant-folds to a
+    * job-free LocalTableScan, and joins/prunes against the manifest carry local
     * rows instead of re-running listing + footer read + a collect job
     * per call. This is the snapshot-caching move every production
     * table format makes (Delta/Iceberg hold the live snapshot's file
     * list in driver memory). Cleared by StandingState.release() with
     * every other memo. */
   private val manifestMemo =
-    graft.StandingState.memo[(String, Int), (String, DataFrame)]()
+    graft.StandingState.memo[(String, String, Int), (String, DataFrame)]()
 
   /** The manifest of version N (file-count-sized). A manifest without
     * its `_SUCCESS` marker is a PARTIAL write from a crashed committer
@@ -144,17 +145,22 @@ object Ledger {
         Array.empty[org.apache.hadoop.fs.FileStatus] }
     require(st.exists(_.getPath.getName == "_SUCCESS"),
       s"version $version is not committed (no _SUCCESS marker in $p)")
+    // name:length:mtime identifies a manifest only while Spark is its
+    // sole writer (every rewrite gets a fresh part-file UUID); a copy
+    // that keeps name and length within the filesystem's mtime
+    // granularity would serve the cached rows
     val token = st.sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .mkString(",")
-    manifestMemo.get((table, version)) match {
+    val key = (spark.sparkContext.applicationId, table, version)
+    manifestMemo.get(key) match {
       case Some((t, df)) if t == token => df
       case _ =>
         val raw = spark.read.parquet(p)
         val rows = raw.collect()
         val local = spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), raw.schema)
-        manifestMemo.put((table, version), (token, local))
+        manifestMemo.put(key, (token, local))
         local
     }
   }
@@ -211,7 +217,7 @@ object Ledger {
     * cache removes is the per-call listing + footer read + relation
     * resolution that every applyDv/readChanges pair re-paid. */
   private val dvPlanMemo =
-    graft.StandingState.memo[(String, Int), (String, Option[DataFrame])]()
+    graft.StandingState.memo[(String, String, Int), (String, Option[DataFrame])]()
 
   /** Version N's outstanding DELETION VECTOR — the keys hidden from
     * reads without rewriting their data files (single column named
@@ -226,11 +232,12 @@ object Ledger {
       val token = st.sortBy(_.getPath.getName)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .mkString(",")
-      dvPlanMemo.get((table, version)) match {
+      val key = (spark.sparkContext.applicationId, table, version)
+      dvPlanMemo.get(key) match {
         case Some((t, df)) if t == token => df
         case _ =>
           val df: Option[DataFrame] = Some(spark.read.parquet(p))
-          dvPlanMemo.put((table, version), (token, df))
+          dvPlanMemo.put(key, (token, df))
           df
       }
     }
@@ -1155,11 +1162,12 @@ object Ledger {
     * the `If-None-Match`/DynamoDB conditional-put guarantee the in-JVM
     * [[CasLogStore]] stands in for. This is the stress-harness
     * emulation, not a production store — a plain-S3 deployment still
-    * swaps in the service-backed conditional put; what ProbeCasMulti
-    * certifies with it is that the commit protocol ABOVE the trait
-    * (claim → sidecars → manifest → validate/rebase) is serializable
-    * across real JVMs for the conditional-put claim style too, not only
-    * for create-exclusive (ProbeOccMulti's territory). In-JVM
+    * swaps in the service-backed conditional put; what
+    * `LedgerMultiProcessSpec` certifies with it is that the commit
+    * protocol ABOVE the trait (claim → sidecars → manifest →
+    * validate/rebase) is serializable across real JVMs for the
+    * conditional-put claim style too, not only for create-exclusive
+    * (the same spec's other race). In-JVM
     * contenders hold their lock through the JVM-wide lock table
     * (`OverlappingFileLockException` → brief spin), so the same store
     * also serves the threaded stress. */

@@ -34,8 +34,9 @@ object Sink {
     }
   }
 
-  /** Demo pipeline: orders partitioned by status — the write side of
-    * the partition-pruning contract. */
+  /** Orders partitioned by status — the write side of the
+    * partition-pruning contract (the declared round-trip below and
+    * SinkVectorDupSpec call it). */
   def writeOrdersByStatus(spark: SparkSession, dir: String, outPath: String): Boolean =
     writePartitioned(
       Tables.orders(spark, dir).withColumn("status", col("o_orderstatus")),
